@@ -1,12 +1,15 @@
 #!/usr/bin/env python
 """Benchmark harness: run the full query registry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and print ONE JSON line:
-  {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+   "failed": {...}, "sf": ...}
 
 Each query is executed to completion via the noop sink (full physical plan
 runs, nothing is shipped to the driver), timed over wall clock. One warmup
 of the flagship query primes the JVM/codegen so numbers reflect steady
-state rather than session startup.
+state rather than session startup. An entry that throws, in the first
+pass or the re-time pass, is left out of ``queries`` and ``value`` and
+listed in ``failed`` with its error; the exit status is then 1.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from mbta_etl_spark.plans import registry  # noqa: E402
 from mbta_etl_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -50,15 +53,21 @@ def main() -> None:
     import gc
 
     timings: dict[str, float] = {}
+    failed: dict[str, str] = {}
+
+    def fail(name: str, e: Exception) -> None:
+        failed[name] = f"{type(e).__name__}: {e}"[:400]
+        print(f"# bench error in {name}: {e}", file=sys.stderr)
+
     for name in sorted(qs):
         t0 = time.perf_counter()
+        df = None
         try:
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 4)
         except Exception as e:  # a failing query must not sink the bench
-            timings[name] = -1.0
-            print(f"# bench error in {name}: {e}", file=sys.stderr)
+            fail(name, e)
         # several operators persist() intermediates (shingle tables,
         # survivor sets) that stay pinned after the consuming query
         # finishes; across 100+ queries in ONE JVM those blocks crowd the
@@ -82,10 +91,7 @@ def main() -> None:
     # execution, keep the min of two runs of the same query — only the
     # set of re-timed entries grew; disclosed in OPTIMIZATION_r08.md.
     n_retime = max(10, len(timings) // 6)
-    for name in sorted(
-        (n for n, t in timings.items() if t >= 0),
-        key=lambda n: -timings[n],
-    )[:n_retime]:
+    for name in sorted(timings, key=lambda n: -timings[n])[:n_retime]:
         try:
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
@@ -96,15 +102,17 @@ def main() -> None:
             spark.catalog.clearCache()
             del df
             gc.collect()
-        except Exception:
-            pass
+        except Exception as e:
+            del timings[name]
+            fail(name, e)
 
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
+    total = round(sum(timings.values()), 4)
     payload = {
         "metric": "registry_total_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "failed": failed,
         "sf": sf,
     }
     print(json.dumps(payload))
@@ -124,7 +132,8 @@ def main() -> None:
         print(f"# bench: could not write BENCH_FULL.json: {e}",
               file=sys.stderr)
     spark.stop()
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

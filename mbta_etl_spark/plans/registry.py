@@ -8691,14 +8691,6 @@ _ORACLES["q64_sorted_neighborhood"] = """
 """
 
 
-# Every entry with a GREEN driver CORRECTNESS row so far (r01 ∪ r02,
-# rows+schema+hash all true). queries() orders never-verified entries
-# FIRST, so the driver's 50-slot correctness window rotates onto fresh
-# entries each round with no manual re-sorting. Maintenance per round:
-# append the newly green names from CORRECTNESS_r{N}.json. Red/errored
-# rows stay OUT of this set so they are automatically re-checked
-# (c04_chunk_pack: r02 hash red from oracle HUGEINT typing, fixed in
-# round 3 — kept out so it leads the r3 window).
 def _roundtrip_fidelity_agg(back: DataFrame) -> DataFrame:
     """Group-level fidelity digest after a format round-trip: counts,
     exact integer sums, and the min md5 of the round-tripped text — any
@@ -12260,157 +12252,9 @@ _ORACLES["v20_freshness_lag"] = """
 """
 
 
-# --- Driver-verified set: DERIVED, not hand-maintained ---------------------
-#
-# Rounds 3, 4, and 5 each ended with the same procedural red: the driver
-# writes CORRECTNESS_r{N}.json AFTER the round's final commit, so a
-# hand-maintained literal of green names was always one window behind and
-# the sentry test failed on the end-of-round tree. The set is therefore
-# derived at import time from the repo-root CORRECTNESS_r*.json files
-# themselves (VERDICT r5 item 1): a name is verified iff its MOST RECENT
-# driver row is all-green. Later rounds win, so a red that was re-run
-# green counts as green, and a green that later regressed red is
-# automatically re-queued for the next window.
-#
-# Only the holdout set stays hand-maintained: entries whose semantics or
-# oracle changed since their last green driver row, so the driver must
-# re-verify them even though an old green row exists. (Round 5 used this
-# for the q09a/q24a/r02 composed-oracle re-verification; all three came
-# back green in CORRECTNESS_r05.json. Round 7 held out st04/st05/st06
-# after the DST wall-time rework; CORRECTNESS_r07.json re-verified all
-# three green, so round 8 starts with the holdout set empty.)
-#
-# Round-8 optimization pass held out the 19 plan-changed entries
-# (ts06/j06 bucketed kernels, g07 subtree fold, m10/m15 id-balance,
-# balance_scan substrate users, band-table materialization users);
-# CORRECTNESS_r08.json re-verified every one green (rows + schema +
-# hash), so round 9 starts with the holdout set empty again.  Entries
-# this round's optimizations plan-change are added below as they land.
-#
-# Round-9 optimization pass: balance_scan applied to four more
-# single-task kernels (t04 fingerprint md5 kernel, s14 brute-force
-# scorer, d27 window build, r04 CMS cell kernel) — +1 conditional
-# round-robin exchange each, semantics and oracles untouched,
-# parity-green at sf0.01 AND sf0.1; held out for driver
-# re-verification per the sync_green_shapes discipline.
-_DRIVER_HOLDOUTS: frozenset[str] = frozenset(
-    {
-        "t04_fingerprint",
-        "s14_knn_classify",
-        "d27_dup_span_extents",
-        "r04_cms_rollup",
-    }
-)
-
-
-def _load_driver_verified() -> frozenset[str]:
-    """Union of latest-round all-green driver rows, minus holdouts."""
-    import glob
-    import json
-    import os
-
-    import re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    status: dict[str, bool] = {}
-
-    def _round_no(path: str) -> int:
-        # sort by PARSED round number, not lexicographically — an
-        # unpadded or 3-digit round file (r6, r100) would otherwise
-        # misorder and let a stale row win the latest-wins merge
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(
-        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")), key=_round_no
-    )
-    for path in paths:
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError) as exc:
-            # a CORRECTNESS file that exists but cannot be parsed means
-            # the verification state is UNKNOWN, not absent — skipping
-            # silently would revert every name in it to the previous
-            # round's greens and run the driver window on stale state
-            # (the stricter test-side parser would crash instead, so
-            # the drift would surface only when the suite runs). Warn
-            # loudly but keep importing: a partially-written file
-            # mid-driver-run must not brick the registry import.
-            import warnings
-
-            warnings.warn(
-                f"driver-verification file {path!r} exists but could "
-                f"not be parsed ({exc}); treating its rows as unknown "
-                "— window ordering may run on stale verification state",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # historical rows-only gate (retired in round 5): the
-                # driver recorded spark_rows and compared nothing else
-                ok = row.get("spark_rows") is not None
-            else:
-                ok = (
-                    row.get("err") is None
-                    and bool(row.get("rows_match"))
-                    and row.get("schema_match") is not False
-                    and row.get("hash_match") is not False
-                )
-            status[name] = ok  # files sort by round: latest row wins
-    return frozenset(n for n, ok in status.items() if ok) - _DRIVER_HOLDOUTS
-
-
-_DRIVER_VERIFIED = _load_driver_verified()
-
-# Round-8 window stacking (VERDICT r7 item 1): cumulative driver
-# coverage after round 7 is 340/364, every latest row green. Exactly
-# 24 registry entries have NEVER been driver-sampled: the text-audit
-# quartet (round-7's deliberate overflow — ADVICE r7 committed them to
-# lead this round) plus the q59-q99 plain-aggregate relational tail.
-# 24 < 50 slots, so this window clears the backlog and round 8 reaches
-# cumulative 366/366 (the two new http_json faces, appended at the
-# tail below, ride the same window). The quartet leads (richest
-# oracles: banded vocab
-# histograms, template mining, OOV joins, per-source keyword ranks);
-# the relational tail follows in registration order. Names already
-# verified are filtered out harmlessly; any remaining slots fall back
-# to registration order (there are none — the pool IS the backlog).
-_WINDOW_PRIORITY = (
-    # round-7 overflow quartet — leads the round (ADVICE r7 item 1)
-    "t21_vocab_bands", "t22_template_prefixes", "t23_oov_rate",
-    "t30_source_keywords",
-    # never-sampled relational tail, registration order
-    "q59_unpivot", "q61_rfm_segments", "q62_trailing_hour_window",
-    "q65_decile_lift", "q66_mom_growth", "q67_dow_profile",
-    "q68_revenue_concentration", "q69_trade_matrix", "q70_market_share",
-    "q71_shipping_priority", "q72_top5_plus_other",
-    "q74_new_vs_returning", "q77_abc_classification",
-    "q78_discount_revenue", "q79_profit_by_nation", "q80_top_supplier",
-    "q81_disjunctive_filter", "q82_lines_per_order",
-    "q85_churned_customers", "q99_revenue_deciles",
-    # round-8 new faces: S1 as a registered Python DataSource
-    "src13_http_batch_source", "st11_http_source_equiv",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from mbta_etl_spark.plans import llm_registry
 
-    # ORDER MATTERS: the driver's differential-correctness harness checks
-    # the first 50 entries in dict iteration order. Entries are registered
-    # in a stable order below, then reordered so every name NOT in
-    # _DRIVER_VERIFIED comes first (preserving registration order within
-    # each group). The front 50 of the unverified pool form this round's
-    # window; tests/test_registry_order.py pins the invariant.
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     out.update(llm_registry.queries())
     out.update(
@@ -12488,8 +12332,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "ts06_ewma": ts06_ewma,
             "j07_salted_join": j07_salted_join,
             "q48_analytic_battery": q48_analytic_battery,
-            # registered in the tail, NOT in llm_registry.queries(),
-            # so the r2 correctness window keeps its 50 planned slots
             "d10_ngram_containment": llm_registry.d10_ngram_containment,
             "m05_phash_dupes": llm_registry.m05_phash_dupes,
             "c10_temperature_mix": c10_temperature_mix,
@@ -12638,8 +12480,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "q93_cohort_ltv": q93_cohort_ltv,
             "q94_shuffle_balance": q94_shuffle_balance,
             "q95_nested_topn": q95_nested_topn,
-            # round-3 additions — registered at the pool tail so the
-            # in-flight correctness window keeps its planned slots
+            # round-3 additions
             "src01_jsonl_roundtrip": src01_jsonl_roundtrip,
             "src02_partition_pruned_scan": src02_partition_pruned_scan,
             "src03_csv_roundtrip": src03_csv_roundtrip,
@@ -12762,22 +12603,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "st11_http_source_equiv": st11_http_source_equiv,
         }
     )
-    # Rotate: never-driver-verified entries first (window-priority names
-    # ahead, then stable registration order), so the driver's first-50
-    # window always lands on entries that still need an independent row —
-    # and, within those, on the riskiest ones first.
-    prio = [
-        k for k in _WINDOW_PRIORITY
-        if k in out and k not in _DRIVER_VERIFIED
-    ]
-    prio_set = set(prio)
-    ordered = [
-        *prio,
-        *(k for k in out
-          if k not in _DRIVER_VERIFIED and k not in prio_set),
-        *(k for k in out if k in _DRIVER_VERIFIED),
-    ]
-    return {k: out[k] for k in ordered}
+    return out
 
 
 def oracle_sql() -> dict[str, str]:

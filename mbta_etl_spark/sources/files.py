@@ -65,15 +65,6 @@ def read_jsonl(
     return reader.schema(schema).json(path)
 
 
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Partitioned-directory parquet — the layout that turns partition-key
-    predicates into directory pruning (see sources/layout.py for the
-    pruning assertions)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def write_jsonl_shards(
     df: DataFrame, path: str, key, n_shards: int, mode: str = "overwrite"
 ):

@@ -70,11 +70,63 @@ def _canon_pdf(pdf):
     return cols, rows
 
 
-def main() -> int:
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per testdata table at ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"'{os.path.join(sf_dir, t)}.parquet'"
+        )
+    return con
+
+
+def check_entry(spark, con, name: str, query, oracle: str | None,
+                sf_dir: str) -> dict:
+    """Run one registry entry at ``sf_dir`` and its oracle SQL on ``con``;
+    return the JSON record, whose ``ok`` is true only when rows, schema
+    and canonical values all match. An entry without an oracle fails."""
+    t0 = time.time()
+    rec = {"name": name}
+    try:
+        spdf = query(spark, sf_dir).toPandas()
+        rec["spark_rows"] = len(spdf)
+        if oracle is None:
+            raise KeyError(f"{name} has no oracle_sql() entry")
+        opdf = con.execute(oracle).fetchdf()
+        rec["oracle_rows"] = len(opdf)
+        scols, srows = _canon_pdf(spdf)
+        ocols, orows = _canon_pdf(opdf)
+        rec["rows_match"] = len(srows) == len(orows)
+        rec["schema_match"] = scols == ocols
+        rec["hash_match"] = srows == orows
+        rec["ok"] = bool(
+            rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+        )
+        if not rec["ok"]:
+            if not rec["schema_match"]:
+                rec["detail"] = {"spark_cols": scols, "oracle_cols": ocols}
+            else:
+                diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:3]
+                rec["detail"] = {"first_diffs": diffs,
+                                 "n_spark": len(srows),
+                                 "n_oracle": len(orows)}
+    except Exception as exc:  # noqa: BLE001
+        rec["ok"] = False
+        rec["err"] = f"{type(exc).__name__}: {exc}"[:400]
+    rec["sec"] = round(time.time() - t0, 3)
+    return rec
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default="")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
+
+
+def main() -> int:
+    args = parse_args()
 
     import __spark_entry__ as entrymod
     from mbta_etl_spark.session import get_spark
@@ -87,51 +139,14 @@ def main() -> int:
         names = [n for n in names if n in keep]
 
     spark = get_spark("parity-sweep")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(args.sf_dir, t)}.parquet'"
-        )
+    con = oracle_db(args.sf_dir)
 
     bad = []
     for name in names:
-        t0 = time.time()
-        rec = {"name": name}
-        try:
-            sdf = queries[name](spark, args.sf_dir)
-            spdf = sdf.toPandas()
-            rec["spark_rows"] = len(spdf)
-            if name not in oracles:
-                rec["status"] = "rows_only"
-                rec["ok"] = True
-            else:
-                opdf = con.execute(oracles[name]).fetchdf()
-                rec["oracle_rows"] = len(opdf)
-                scols, srows = _canon_pdf(spdf)
-                ocols, orows = _canon_pdf(opdf)
-                rec["rows_match"] = len(srows) == len(orows)
-                rec["schema_match"] = scols == ocols
-                rec["hash_match"] = srows == orows
-                rec["ok"] = bool(
-                    rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
-                )
-                if not rec["ok"]:
-                    if not rec["schema_match"]:
-                        rec["detail"] = {"spark_cols": scols, "oracle_cols": ocols}
-                    else:
-                        diffs = [
-                            (a, b) for a, b in zip(srows, orows) if a != b
-                        ][:3]
-                        rec["detail"] = {"first_diffs": diffs,
-                                         "n_spark": len(srows),
-                                         "n_oracle": len(orows)}
-        except Exception as exc:  # noqa: BLE001
-            rec["ok"] = False
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:400]
-        rec["sec"] = round(time.time() - t0, 3)
+        rec = check_entry(spark, con, name, queries[name], oracles.get(name),
+                          args.sf_dir)
         print(json.dumps(rec, default=str), flush=True)
-        if not rec.get("ok"):
+        if not rec["ok"]:
             bad.append(name)
 
     print(

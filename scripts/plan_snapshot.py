@@ -10,6 +10,12 @@ tests/test_plan_hygiene.py fails on any entry whose live plan no longer
 matches, so accidental regressions (broadcast -> sort-merge, a new
 shuffle, a Python stage creeping into a JVM pipeline) can't land
 silently.
+
+Refresh gate: every entry whose fingerprint changed, or that is new, is
+first compared with its DuckDB oracle at ``scripts/parity_sweep.py``'s
+default scale (sf0.01). If any of them mismatches, the snapshot is left
+as it was and the script exits 1, so a fingerprint is only refreshed
+for a plan whose results have been re-verified.
 """
 
 from __future__ import annotations
@@ -26,7 +32,33 @@ SNAPSHOT_PATH = os.path.join(
 )
 
 
-def main() -> None:
+def refresh(snap: dict[str, dict[str, int]], check, path: str = SNAPSHOT_PATH) -> int:
+    """Write ``snap`` to ``path`` once ``check(name)`` — a parity_sweep
+    record — is ok for every entry whose fingerprint differs from the one
+    recorded at ``path``. Returns 0, or 1 with ``path`` untouched."""
+    with open(path) as f:
+        old = json.load(f)
+    changed = sorted(n for n in snap if snap[n] != old.get(n))
+    print(f"{len(changed)} changed plan fingerprints: {changed}", file=sys.stderr)
+    bad = []
+    for name in changed:
+        rec = check(name)
+        print(json.dumps(rec, default=str), flush=True)
+        if not rec["ok"]:
+            bad.append(name)
+    if bad:
+        print(f"oracle mismatch in {bad}; {path} not rewritten", file=sys.stderr)
+        return 1
+    with open(path, "w") as f:
+        json.dump(snap, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {len(snap)} plan fingerprints to {path}")
+    return 0
+
+
+def main() -> int:
+    import parity_sweep
+
     from mbta_etl_spark.plans.planmetrics import plan_text, shape_metrics
     from mbta_etl_spark.session import get_spark
 
@@ -41,11 +73,20 @@ def main() -> None:
         df = qs[name](spark, sf_dir)
         snap[name] = shape_metrics(plan_text(df))
         spark.catalog.clearCache()
-    with open(SNAPSHOT_PATH, "w") as f:
-        json.dump(snap, f, indent=1, sort_keys=True)
-        f.write("\n")
-    print(f"wrote {len(snap)} plan fingerprints to {SNAPSHOT_PATH}")
+
+    oracles = entrymod.oracle_sql()
+    oracle_dir = parity_sweep.parse_args([]).sf_dir
+    con = parity_sweep.oracle_db(oracle_dir)
+
+    def check(name: str) -> dict:
+        rec = parity_sweep.check_entry(
+            spark, con, name, qs[name], oracles.get(name), oracle_dir
+        )
+        spark.catalog.clearCache()
+        return rec
+
+    return refresh(snap, check)
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -1,152 +1,15 @@
-"""Registry-order guard: the driver's correctness harness checks the
-FIRST 50 entries of queries() in iteration order. queries() reorders the
-registry so entries without a green driver CORRECTNESS row come first —
-the window rotates onto ~50 fresh entries each round. These tests pin
-that invariant so an accidental reorder can't silently strip entries of
-differential verification (the round-1 failure mode).
-
-Since round 6, ``plans/registry._DRIVER_VERIFIED`` is DERIVED at import
-time from the repo-root CORRECTNESS_r*.json files (latest row per name
-wins), so the end-of-round state — driver writes CORRECTNESS_r{N}.json
-after the final commit — can never fail these tests again (the identical
-hand-maintenance red ended rounds 3, 4, and 5). The only hand-maintained
-piece is ``registry._DRIVER_HOLDOUTS``: entries whose semantics/oracle
-changed since their last green row, queued for driver re-verification.
-"""
+"""Registry bookkeeping guards: every ``queries()`` entry has a DuckDB
+oracle in ``oracle_sql()`` (and no oracle is orphaned), and the
+hand-bumped registry counts in COVERAGE.md and README.md match the
+registry."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import __spark_entry__ as entrymod
-from mbta_etl_spark.plans.registry import _DRIVER_HOLDOUTS, _DRIVER_VERIFIED
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _latest_green_rows() -> set[str]:
-    """Re-derivation of the driver-green set: for each name, the row
-    from the HIGHEST-numbered CORRECTNESS file wins; a name is green iff
-    that latest row is all-green. This is NOT a full double-entry guard
-    (a semantic bug shared with registry._load_driver_verified would
-    pass both sides); what the copy does catch is file-discovery
-    divergence (glob vs listdir) and — because this side parses
-    STRICTLY (identity-True booleans, integral row counts, no coercion)
-    — any driver format drift like booleans arriving as strings or
-    counts as floats, which the registry's laxer parser would silently
-    accept."""
-    import re
-
-    status: dict[str, bool] = {}
-    names = [
-        fn for fn in os.listdir(REPO)
-        if fn.startswith("CORRECTNESS_r") and fn.endswith(".json")
-    ]
-    # numeric round sort (listdir + regex here vs glob + regex in the
-    # registry): an unpadded/3-digit round file must not misorder the
-    # latest-wins merge on either side. Guard the regex like
-    # registry._round_no does — a stray CORRECTNESS_rfinal.json passes
-    # the startswith/endswith filter, and an AttributeError here would
-    # be an opaque crash where the registry degrades gracefully to -1.
-    def _round_no(fn: str) -> int:
-        m = re.search(r"r(\d+)", fn)
-        return int(m.group(1)) if m else -1
-
-    names.sort(key=_round_no)
-    for fn in names:
-        with open(os.path.join(REPO, fn)) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if row.get("err") == "no_oracle":
-                # historical rows-only gate (retired in round 5)
-                ok = isinstance(row.get("spark_rows"), int)
-            else:
-                ok = (
-                    row.get("err") is None
-                    and row.get("rows_match") is True
-                    and row.get("schema_match") in (True, None)
-                    and row.get("hash_match") in (True, None)
-                )
-            status[name] = ok
-    return {n for n, ok in status.items() if ok}
-
-
-def test_window_contains_only_unverified_entries():
-    """While unverified entries remain, none of the driver's 50 slots may
-    be wasted on an already-green entry."""
-    names = list(entrymod.queries())
-    unverified = [n for n in names if n not in _DRIVER_VERIFIED]
-    window = names[: min(50, len(names))]
-    if len(unverified) >= 50:
-        overlap = set(window) & _DRIVER_VERIFIED
-        assert not overlap, (
-            f"verified entries occupy driver window slots: {sorted(overlap)}"
-        )
-    # and the window must be exactly the FIRST unverified entries in
-    # registration order — no unverified entry may jump the queue past
-    # another silently
-    assert window == unverified[: len(window)] or len(unverified) < 50
-
-
-def test_driver_verified_is_derived_from_correctness_files():
-    """_DRIVER_VERIFIED must equal the latest-green rows of the
-    CORRECTNESS_r*.json reports minus the hand-maintained holdouts. This
-    holds by construction after any driver write — including the
-    end-of-round write that lands after the final commit — because both
-    sides read the same files; the double-entry derivation above guards
-    the parser itself."""
-    green = _latest_green_rows()
-    assert _DRIVER_VERIFIED == green - _DRIVER_HOLDOUTS
-    # holdouts must be real, registered entries that HAVE an old green
-    # row (otherwise they're already unverified and the holdout is dead
-    # weight that should be removed)
-    registered = set(entrymod.queries())
-    dead = {n for n in _DRIVER_HOLDOUTS if n not in green or n not in registered}
-    assert not dead, f"stale holdouts (no green row / not registered): {sorted(dead)}"
-
-
-def test_round8_window_front_loads_risky_entries():
-    """Round 8 finishes the never-sampled backlog (VERDICT r7 item 1):
-    the round-7 overflow text-audit quartet leads, then the q59-q99
-    relational tail — all 24 remaining never-driver-sampled entries,
-    plus the two new round-8 http_json DataSource faces, fit in one
-    50-slot window, reaching cumulative 366/366."""
-    from mbta_etl_spark.plans.registry import _WINDOW_PRIORITY
-
-    names = list(entrymod.queries())
-    window = set(names[:50])
-    must_cover = {
-        "t21_vocab_bands", "t22_template_prefixes", "t23_oov_rate",
-        "t30_source_keywords",
-        "q59_unpivot", "q61_rfm_segments", "q62_trailing_hour_window",
-        "q65_decile_lift", "q66_mom_growth", "q67_dow_profile",
-        "q68_revenue_concentration", "q69_trade_matrix",
-        "q70_market_share", "q71_shipping_priority",
-        "q72_top5_plus_other", "q74_new_vs_returning",
-        "q77_abc_classification", "q78_discount_revenue",
-        "q79_profit_by_nation", "q80_top_supplier",
-        "q81_disjunctive_filter", "q82_lines_per_order",
-        "q85_churned_customers", "q99_revenue_deciles",
-        "src13_http_batch_source", "st11_http_source_equiv",
-    }
-    # an already-VERIFIED name satisfies the check: once the driver
-    # writes CORRECTNESS_r07.json these names go green, rotate out of
-    # the window, and must NOT re-trigger this assertion on the
-    # end-of-round tree (the failure mode the derived set eliminates)
-    missing = must_cover - window - _DRIVER_VERIFIED
-    assert not missing, f"risky entries not in driver window: {sorted(missing)}"
-    # priority names still unverified must appear first, in priority
-    # order (names not yet registered are filtered, matching queries())
-    prio = [
-        n for n in _WINDOW_PRIORITY
-        if n not in _DRIVER_VERIFIED and n in set(names)
-    ]
-    # ... which also pins the driver window (names[:50]) to the priority
-    # head whenever >= 50 priority names remain; any overflow
-    # (deliberate: it leads next round's queue) stays ordered right
-    # behind the window
-    assert names[: len(prio)] == prio
 
 
 def test_every_query_has_oracle_or_documented_exception():
@@ -184,83 +47,3 @@ def test_coverage_doc_counts_match_registry():
     rm = re.search(r"# (\d+) analytics ops", readme)
     assert rm, "README registry count comment missing"
     assert int(rm.group(1)) == len(entrymod.queries())
-
-
-def test_verified_entries_plan_shapes_frozen():
-    """The mechanized _DRIVER_HOLDOUTS invariant (VERDICT r6 item 4): a
-    driver-verified entry whose plan fingerprint no longer matches the
-    shape recorded when the driver verified it
-    (driver_green_shapes.json, written by scripts/sync_green_shapes.py
-    at round start) must be moved into registry._DRIVER_HOLDOUTS so the
-    driver re-verifies it — forgetting that move is now a red suite,
-    not a discipline slip. _DRIVER_VERIFIED already subtracts holdouts,
-    so holding a name out both silences this check and re-queues the
-    entry at the front of the window, which is the wanted lifecycle.
-
-    Limitation, stated: streaming equivalence entries' fingerprints are
-    only the standing-table read-back (the replay executes inside the
-    entry), so a semantic change there does not move the fingerprint —
-    those holdouts remain review discipline (st05/st06 in round 7).
-
-    End-of-round tolerance: a name verified for the FIRST time by a
-    round file NEWER than the sync's recorded ``_synced_through``
-    marker has no recorded shape yet — the driver writes
-    CORRECTNESS_r{N}.json after the final commit, and the sync runs at
-    the NEXT round's start. Requiring a row for those names would
-    recreate the rounds-3-5 end-of-round red. The marker (ADVICE r7
-    item 4) narrows the old blanket latest-file exemption: once the
-    sync has folded a round in, EVERY name first verified by that
-    round must have a recorded shape, so a plan edit made after the
-    sync can no longer hide in the exemption window."""
-    import re
-
-    with open(os.path.join(REPO, "plans_snapshot.json")) as f:
-        snapshot = json.load(f)
-    with open(os.path.join(REPO, "driver_green_shapes.json")) as f:
-        green_shapes = json.load(f)
-    # rounds <= this marker are folded into the file; missing rows are
-    # tolerated only for names first verified AFTER it. A file WITHOUT
-    # the marker must fail loudly, not degrade: popping a -1 default
-    # would tolerate every missing row (review r8 finding #1).
-    assert "_synced_through" in green_shapes, (
-        "driver_green_shapes.json has no _synced_through marker — "
-        "regenerate it with scripts/sync_green_shapes.py (round-8+ "
-        "format); without the marker the missing-row tolerance cannot "
-        "be scoped and the freeze gate would silently pass on an "
-        "unsynced file"
-    )
-    synced_through = green_shapes.pop("_synced_through")
-
-    # earliest green round per name, to distinguish "freshly verified,
-    # sync pending" from "sync was skipped"
-    def _round_no(fn: str) -> int:
-        m = re.search(r"r(\d+)", fn)
-        return int(m.group(1)) if m else -1
-
-    files = sorted(
-        (
-            fn for fn in os.listdir(REPO)
-            if fn.startswith("CORRECTNESS_r") and fn.endswith(".json")
-        ),
-        key=_round_no,
-    )
-    first_seen: dict[str, int] = {}
-    for fn in files:
-        with open(os.path.join(REPO, fn)) as f:
-            for name in json.load(f):
-                first_seen.setdefault(name, _round_no(fn))
-
-    problems = []
-    for name in sorted(_DRIVER_VERIFIED):
-        if name not in green_shapes:
-            if first_seen.get(name, -1) > synced_through:
-                continue  # first verified after the sync: sync pending
-            problems.append(f"{name}: no recorded green shape")
-        elif green_shapes[name] != snapshot.get(name):
-            problems.append(f"{name}: plan shape changed since driver green")
-    assert not problems, (
-        "driver-verified entries drifted from their verified plan shape "
-        "— move them into registry._DRIVER_HOLDOUTS (or, at round start "
-        "only, refresh scripts/sync_green_shapes.py): "
-        + "; ".join(problems)
-    )
