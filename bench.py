@@ -26,6 +26,21 @@ from mbta_etl_spark.plans import registry  # noqa: E402
 from mbta_etl_spark.session import get_spark  # noqa: E402
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Prime codegen + parquet footer caches with the flagship query, and
+    spin up the Arrow Python worker pool (the first mapInPandas otherwise
+    pays worker fork + import cost inside whichever timed query happens
+    to run first)."""
+    registry.q16_pricing_summary(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    import pandas as pd  # noqa: F401
+
+    spark.range(32).repartition(32).mapInPandas(
+        lambda it: it, schema="id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -35,18 +50,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 
-    # warmup: prime codegen + parquet footer caches, and spin up the Arrow
-    # Python worker pool (first mapInPandas otherwise pays worker fork +
-    # import cost inside whichever timed query happens to run first)
     try:
-        registry.q16_pricing_summary(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        import pandas as pd  # noqa: F401
-
-        spark.range(32).repartition(32).mapInPandas(
-            lambda it: it, schema="id long"
-        ).write.format("noop").mode("overwrite").save()
+        warm_up(spark, sf_dir)
     except Exception as e:
         print(f"# bench warmup failed: {e}", file=sys.stderr)
 

@@ -3,9 +3,9 @@
 The reference's extract step (pipeline/extract.go:11-33) is a polling
 HTTP GET of a JSON:API envelope whose ``data`` array is unmarshalled
 through a declared struct — unknown fields dropped, missing fields
-nil. ``mbta_etl_spark.sources.http_json`` already re-expresses that as
-driver-side helpers; THIS module makes it a registered Spark source, so
-the poller is spelled the way any other source is spelled:
+nil. ``mbta_etl_spark.sources.http_json`` holds that decode; THIS module
+makes it a registered Spark source, so the poller is spelled the way any
+other source is spelled:
 
     spark.dataSource.register(HttpJsonDataSource)
     spark.read.format("http_json").option("urls", ...).load()        # batch
@@ -37,15 +37,16 @@ Faces:
     extract.go:18-30: non-2xx or malformed JSON raises and aborts the
     query — nothing is silently skipped.
 
-Rows are projected through the user schema (or the default
-RAW_VEHICLE_SCHEMA) field-by-field like Go's ``json.Unmarshal``:
+Rows are decoded by ``http_json.decode_rows`` — the same decode
+``etl.run`` uses — through the user schema (or the default
+RAW_VEHICLE_SCHEMA), field-by-field like Go's ``json.Unmarshal``:
 unknown JSON keys dropped, missing keys null, nested structs/arrays
 recursed, numeric widths coerced (JSON has one number type).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -53,102 +54,16 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    ByteType,
-    DataType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    MapType,
-    ShortType,
-    StringType,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
 from mbta_etl_spark.pipeline.schema import RAW_VEHICLE_SCHEMA
-
-_INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
-_FLOAT_TYPES = (FloatType, DoubleType)
-
-
-def _project(value: Any, dtype: DataType) -> Any:
-    """JSON value -> schema-shaped Python value, json.Unmarshal-style
-    (reference pipeline/extract.go:28 via model/model.go:8-30): absent
-    or null stays None, unknown object keys are dropped, numeric JSON
-    values coerce to the declared width, and type conflicts raise (the
-    abort-the-run contract of main_test.go:91-108)."""
-    if value is None:
-        return None
-    if isinstance(dtype, StructType):
-        if not isinstance(value, dict):
-            raise ValueError(f"expected JSON object for {dtype.simpleString()}")
-        return tuple(_project(value.get(f.name), f.dataType) for f in dtype.fields)
-    if isinstance(dtype, ArrayType):
-        if not isinstance(value, list):
-            raise ValueError(f"expected JSON array for {dtype.simpleString()}")
-        return [_project(v, dtype.elementType) for v in value]
-    if isinstance(dtype, MapType):
-        if not isinstance(dtype.keyType, StringType):
-            # JSON object keys are always strings; a non-string keyType
-            # can never be satisfied — abort loudly instead of handing
-            # str-keyed dicts to the engine conversion boundary
-            raise ValueError(
-                f"http_json map keys are JSON strings; schema declares "
-                f"{dtype.simpleString()}"
-            )
-        if not isinstance(value, dict):
-            raise ValueError(f"expected JSON object for {dtype.simpleString()}")
-        return {k: _project(v, dtype.valueType) for k, v in value.items()}
-    if isinstance(dtype, StringType):
-        if not isinstance(value, str):
-            raise ValueError(f"expected JSON string, got {type(value).__name__}")
-        return value
-    if isinstance(dtype, BooleanType):
-        if not isinstance(value, bool):
-            raise ValueError(f"expected JSON bool, got {type(value).__name__}")
-        return value
-    if isinstance(dtype, _INT_TYPES):
-        if isinstance(value, bool) or not isinstance(value, (int, float)):
-            raise ValueError(f"expected JSON number, got {type(value).__name__}")
-        if isinstance(value, float) and not value.is_integer():
-            raise ValueError(f"non-integral {value!r} for {dtype.simpleString()}")
-        out = int(value)
-        # Go's json.Unmarshal errors on numeric overflow of the target
-        # width — enforce the declared range here, a clean abort instead
-        # of an opaque Arrow/Pickle conversion error in the executor
-        bits = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}[
-            dtype.simpleString()
-        ]
-        lo = -(1 << (bits - 1))
-        if not (lo <= out < -lo):
-            raise ValueError(
-                f"{value!r} overflows {dtype.simpleString()}"
-            )
-        return out
-    if isinstance(dtype, _FLOAT_TYPES):
-        if isinstance(value, bool) or not isinstance(value, (int, float)):
-            raise ValueError(f"expected JSON number, got {type(value).__name__}")
-        return float(value)
-    raise ValueError(f"unsupported type in http_json schema: {dtype.simpleString()}")
+from mbta_etl_spark.sources.http_json import decode_rows, fetch_json
 
 
 def _fetch_rows(url: str, schema: StructType, timeout: float) -> list[Tuple]:
-    """One poll: GET + envelope parse + schema projection. Raises
-    ExtractError on non-2xx / malformed JSON / missing data array.
-    A JSON null element inside data[] decodes to an all-null row —
-    Go's json.Unmarshal parity (null -> zero-value struct, no error;
-    reference pipeline/extract.go:28) — instead of handing the engine
-    a bare None where it expects a tuple."""
-    from mbta_etl_spark.sources.http_json import fetch_json, parse_payload
-
-    null_row = tuple(None for _ in schema.fields)
-    return [
-        null_row if item is None else _project(item, schema)
-        for item in parse_payload(fetch_json(url, timeout))
-    ]
+    """One poll: GET + the shared JSON:API decode. Raises ExtractError on
+    non-2xx / malformed JSON / missing data array / type conflict."""
+    return decode_rows(fetch_json(url, timeout), schema)
 
 
 def _split_urls(raw: str) -> list[str]:

@@ -1,5 +1,5 @@
 """A custom SINK via the Python DataSource API (Spark 4) — the write
-side of the connector surface (``sources/vehicles_source.py`` covers
+side of the connector surface (``sources/http_datasource.py`` covers
 the read + streaming-offsets side).
 
 Protocol demonstrated end-to-end: each task's ``write(iterator)``

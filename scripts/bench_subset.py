@@ -31,6 +31,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from bench import warm_up
     from mbta_etl_spark.plans import registry
     from mbta_etl_spark.session import get_spark
 
@@ -41,15 +42,7 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown entries: {unknown}")
 
-    # same warmup as bench.py
-    registry.q16_pricing_summary(spark, args.sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    import pandas as pd  # noqa: F401
-
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, args.sf_dir)
 
     for _ in range(args.repeat):
         timings: dict[str, float] = {}

@@ -30,6 +30,7 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=1)
     args = ap.parse_args()
 
+    from bench import warm_up
     from mbta_etl_spark.plans import registry
     from mbta_etl_spark.session import get_spark
 
@@ -37,13 +38,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 
-    # warmup: codegen + Arrow worker pool (bench.py's protocol)
-    registry.q16_pricing_summary(spark, args.sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, args.sf_dir)
 
     # --- instrumentation ------------------------------------------------
     import mbta_etl_spark.streaming.replay as replay

@@ -58,6 +58,7 @@ def main() -> None:
     ap.add_argument("--only", type=str, default=None)
     args = ap.parse_args()
 
+    from bench import warm_up
     from mbta_etl_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -81,13 +82,7 @@ def main() -> None:
                 f"--only names not in the registry: {unknown} (typo?)"
             )
 
-    # warm: codegen + Arrow worker pool
-    qs["q16_pricing_summary"](spark, f"/root/testdata/sf{SFS[0]}").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, entrymod.SF0001)  # SFS[0], the smallest factor
 
     rows = []
     for name, table in entries:

@@ -14,10 +14,10 @@ import pytest
 
 from mbta_etl_spark.sources.http_datasource import (
     HttpJsonDataSource,
-    _project,
     drain_poll_replay,
     register_http_json,
 )
+from mbta_etl_spark.sources.http_json import _project
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,

@@ -14,6 +14,7 @@ from mbta_etl_spark.operators import core
 from mbta_etl_spark.pipeline import vehicle_queries as vq
 from mbta_etl_spark.pipeline.load import upsert_parquet
 from mbta_etl_spark.pipeline.schema import VEHICLE_SCHEMA
+from mbta_etl_spark.pipeline.transform import transform
 from mbta_etl_spark.sources import http_json
 
 NOW = datetime.datetime(2024, 1, 15, 12, 0, 0)
@@ -33,30 +34,50 @@ def _vehicles_df(spark, rows):
 
 # --- extract (S1) ---------------------------------------------------------
 
-def test_extract_success(spark):
-    """Canonical 1-vehicle payload decodes (main_test.go:18-69)."""
-    body = json.dumps({
-        "data": [{
-            "id": "test-vehicle-1", "type": "vehicle",
-            "attributes": {
-                "updated_at": "2024-01-15T10:30:00-05:00", "speed": 25.5,
-                "occupancy_status": "MANY_SEATS_AVAILABLE", "longitude": -71.06,
-                "latitude": 42.35, "label": "1234", "direction_id": 0,
-                "current_status": "IN_TRANSIT_TO", "bearing": 180,
-            },
-        }]
-    })
-    df = http_json.ingest_payload(spark, body)
-    rows = df.collect()
-    assert len(rows) == 1
-    assert rows[0]["id"] == "test-vehicle-1"
-    assert rows[0]["attributes"]["label"] == "1234"
-    # unknown fields would be dropped by the schema; nullable missing ok
+def _item(**attrs):
+    """The canonical vehicle of main_test.go:18-69, attributes overridable."""
+    a = {
+        "updated_at": "2024-01-15T10:30:00-05:00", "speed": 25.5,
+        "occupancy_status": "MANY_SEATS_AVAILABLE", "longitude": -71.06,
+        "latitude": 42.35, "label": "1234", "direction_id": 0,
+        "current_status": "IN_TRANSIT_TO", "bearing": 180,
+    }
+    a.update(attrs)
+    return {"id": "test-vehicle-1", "type": "vehicle", "attributes": a}
 
 
-def test_extract_invalid_json(spark):
-    with pytest.raises(http_json.ExtractError):
-        http_json.ingest_payload(spark, "{not json")
+@pytest.mark.parametrize("data", [
+    pytest.param([_item()], id="canonical"),
+    # Go's float64 fields accept JSON integer literals
+    pytest.param([_item(speed=5, latitude=42, longitude=-71)],
+                 id="int_literal_doubles"),
+    # a null element is Go's zero-value struct, which the T1 rule drops
+    pytest.param([None, _item()], id="null_element"),
+])
+def test_extract_success(spark, data):
+    """The payload decodes and its one valid vehicle survives the
+    transform (main_test.go:18-69)."""
+    df = http_json.ingest_payload(spark, json.dumps({"data": data}))
+    assert df.count() == len(data)
+    row = next(r for r in df.collect() if r["id"] is not None)
+    assert row["id"] == "test-vehicle-1"
+    assert row["attributes"]["label"] == "1234"
+    attrs = data[-1]["attributes"]
+    for k in ("speed", "latitude", "longitude"):
+        assert row["attributes"][k] == float(attrs[k])
+    assert [r["id"] for r in transform(df).collect()] == ["test-vehicle-1"]
+
+
+@pytest.mark.parametrize("body,match", [
+    pytest.param("{not json", "parse JSON", id="malformed_json"),
+    # no silent string->number coercion; the error names the field
+    pytest.param(json.dumps({"data": [_item(speed="5")]}),
+                 r"attributes\.speed: expected JSON number, got str",
+                 id="string_speed"),
+])
+def test_extract_invalid_json(spark, body, match):
+    with pytest.raises(http_json.ExtractError, match=match):
+        http_json.ingest_payload(spark, body)
 
 
 def test_extract_missing_data_array(spark):
